@@ -21,6 +21,9 @@ object Pipeline {
     */
   def ingest(spark: SparkSession, pagesPath: String, dir: String,
       maxWorks: Int = 1000000): Long = {
+    // a re-run after a crash first finishes (or discards) any swap the
+    // dead run left, so the dimension reads below see one whole table
+    Warehouse.recover(spark, dir)
     val runId = java.util.UUID.randomUUID().toString
     Warehouse.logRun(spark, dir, runId, "start", pagesPath, 0L)
 
@@ -113,6 +116,7 @@ object Pipeline {
   /** Catalog integration + keyword relabel (§3.2). */
   def integrateCatalog(spark: SparkSession, csvPath: String,
       dir: String): Unit = {
+    Warehouse.recover(spark, dir)
     val incoming = Catalog.readCsv(spark, csvPath)
     val existing =
       if (Warehouse.exists(spark, dir, "sedes_areas"))

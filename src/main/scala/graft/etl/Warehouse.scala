@@ -2,6 +2,9 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+
+import graft.ext.DirSwap
 
 /** Parquet warehouse with idempotent keyed appends (reference K1:
   * `INSERT OR IGNORE`, PIPE:675-706) and full-replace writes (K2).
@@ -19,12 +22,92 @@ object Warehouse {
     * supported scheme (file://, hdfs://, s3a://), not just local paths.
     */
   def exists(spark: SparkSession, dir: String, table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(dir, table))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val (fs, swap) = swapOf(spark, dir, table)
+    fs.exists(swap.resolve(table))
   }
 
-  def read(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(path(dir, table))
+  /** The table's swap unit: `dir/.<table>.stage` / `.<table>.aside`. */
+  private def swapOf(spark: SparkSession, dir: String,
+      table: String): (FileSystem, DirSwap) = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, new DirSwap(fs, root, table))
+  }
+
+  /** Members of `table`'s unit still staged: the whole table when its
+    * stage holds data files directly, else — a partition merge — each
+    * staged leaf partition directory still holding data files (a
+    * promoted leaf leaves at most its empty parents behind).
+    */
+  private def stagedMembers(fs: FileSystem, swap: DirSwap,
+      table: String): Seq[String] = {
+    val staged = swap.stage(table)
+    if (!fs.exists(staged)) Nil
+    else if (fs.listStatus(staged).exists(isDataFile)) Seq(table)
+    else partitionLeaves(fs, staged).map(rel => s"$table/$rel")
+  }
+
+  private def isDataFile(st: FileStatus): Boolean =
+    st.isFile && !st.getPath.getName.startsWith("_") &&
+      !st.getPath.getName.startsWith(".")
+
+  private def isPartitionDir(st: FileStatus): Boolean =
+    st.isDirectory && st.getPath.getName.contains("=")
+
+  /** Relative paths of the `k=v[/k=v…]` leaf dirs holding data files. */
+  private def partitionLeaves(fs: FileSystem, base: Path): Seq[String] = {
+    def walk(d: Path, rel: String): Seq[String] = {
+      val kids = fs.listStatus(d).toSeq
+      val sub = kids.filter(isPartitionDir).flatMap { st =>
+        walk(st.getPath, (if (rel.isEmpty) "" else rel + "/") +
+          st.getPath.getName)
+      }
+      if (rel.nonEmpty && kids.exists(isDataFile)) rel +: sub else sub
+    }
+    walk(base, "")
+  }
+
+  /** Writer entry: finish or discard a dead swap of `table`. */
+  private def recover(spark: SparkSession, dir: String,
+      table: String): Unit = {
+    val (fs, swap) = swapOf(spark, dir, table)
+    swap.recover(stagedMembers(fs, swap, table))
+  }
+
+  /** Finish or discard every dead swap under `dir`: run by each pipeline
+    * stage before it builds plans that read the warehouse.
+    */
+  def recover(spark: SparkSession, dir: String): Unit = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val Debris = """\.(.+)\.(?:stage|aside)""".r
+    if (fs.exists(root))
+      fs.listStatus(root).toSeq.map(_.getPath.getName)
+        .collect { case Debris(t) => t }.distinct
+        .foreach(recover(spark, dir, _))
+  }
+
+  /** The table as readers see it: while a committed swap is mid-promote,
+    * its staged members replace their live counterparts (see
+    * [[DirSwap]]). Mutates nothing.
+    */
+  def read(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val (fs, swap) = swapOf(spark, dir, table)
+    val staged = if (swap.committed) stagedMembers(fs, swap, table) else Nil
+    val (livePath, stagedPath) = (path(dir, table), swap.stage(table).toString)
+    if (staged.isEmpty) spark.read.parquet(livePath)
+    else if (staged == Seq(table)) spark.read.parquet(stagedPath)
+    else {
+      // partition merge mid-promote: live leaves not re-staged ∪ staged
+      val rest = partitionLeaves(fs, new Path(livePath))
+        .filterNot(rel => staged.contains(s"$table/$rel"))
+        .map(rel => s"$livePath/$rel")
+      val stagedRead = spark.read.parquet(stagedPath)
+      if (rest.isEmpty) stagedRead
+      else spark.read.option("basePath", livePath).parquet(rest: _*)
+        .unionByName(stagedRead)
+    }
+  }
 
   /** Schema-evolution read (the reference's `_ensure_column` analog,
     * PIPE:200-205, moved to the read path): Parquet footer merge across
@@ -50,35 +133,18 @@ object Warehouse {
   def overwrite(df: DataFrame, dir: String, table: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path(dir, table))
 
-  /** Full replace of a table the plan also READS: write to a side
-    * directory first, then swap — a lazy plan reading `table` while
-    * overwriting `table` would otherwise truncate its own input.
+  /** Full replace of a table the plan also READS: stage the new table,
+    * then swap it in as a one-member [[DirSwap]] unit — a lazy plan
+    * reading `table` while overwriting `table` would otherwise truncate
+    * its own input. A dead swap is finished or discarded first; a plan
+    * that reads `table` must be built after that (see [[recover]]).
     */
   def overwriteSwap(spark: SparkSession, df: DataFrame, dir: String,
       table: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = new Path(path(dir, table + "__tmp"))
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val dst = new Path(path(dir, table))
-    val old = new Path(path(dir, table + "__old"))
-    // Hadoop FileSystem throughout (file://, hdfs://, s3a:// all work):
-    // move the live table aside, promote tmp, drop the old copy. On a
-    // failed promote the old table is restored — never a deleted table
-    // with the new data stranded in __tmp.
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(old)) fs.delete(old, true)
-    val hadDst = fs.exists(dst)
-    if (hadDst && !fs.rename(dst, old))
-      throw new java.io.IOException(s"overwriteSwap: rename $dst -> $old failed")
-    if (!fs.rename(tmp, dst)) {
-      val restored = !hadDst || fs.rename(old, dst)
-      throw new java.io.IOException(
-        s"overwriteSwap: rename $tmp -> $dst failed" +
-          (if (restored) " (previous table restored)"
-           else s" AND restoring $old -> $dst failed — data preserved at $old"))
-    }
-    if (hadDst) fs.delete(old, true)
-    ()
+    recover(spark, dir, table)
+    val (_, swap) = swapOf(spark, dir, table)
+    df.write.mode(SaveMode.Overwrite).parquet(swap.stage(table).toString)
+    swap.commit(Seq(table))
   }
 
   /** K1 — keyed idempotent append. `partitionCols` (e.g. `anio` on obras)
@@ -88,6 +154,7 @@ object Warehouse {
   def idempotentAppend(spark: SparkSession, df: DataFrame, dir: String,
       table: String, keys: Seq[String],
       partitionCols: Seq[String] = Nil): Unit = {
+    recover(spark, dir, table)
     val deduped = df.dropDuplicates(keys)
     def writer(d: DataFrame, mode: SaveMode) = {
       val w = d.write.mode(mode)
@@ -118,12 +185,10 @@ object Warehouse {
     * handful of `anio=` directories and rewriting the warehouse.
     *
     * Mechanics: the merged rows for the touched partitions (batch ∪
-    * existing-anti-batch, partition-pruned read) are staged to a
-    * `__delta` side directory — fully materialized BEFORE any live file
-    * moves — then each staged partition directory is swapped in with the
-    * same aside/promote/restore discipline as `overwriteSwap`. Aside
-    * copies live OUTSIDE the table root so a crashed merge can never be
-    * misread as an extra partition value.
+    * existing-anti-batch, partition-pruned read) are staged — fully
+    * materialized BEFORE any live file moves — and the touched partition
+    * directories are swapped in as ONE [[DirSwap]] unit, so readers see
+    * all old or all new partitions, never a mix.
     *
     * Contract: partition values must be stable under updates (derive
     * them from the key, or include them in it) — a key that MOVED
@@ -135,7 +200,7 @@ object Warehouse {
   def mergeByKey(spark: SparkSession, batch: DataFrame, dir: String,
       table: String, keys: Seq[String],
       partitionCols: Seq[String] = Nil): Unit = {
-    import org.apache.hadoop.fs.Path
+    recover(spark, dir, table)
     val deduped = batch.dropDuplicates(keys)
     def antiMerged(existing: DataFrame): DataFrame =
       deduped.unionByName(
@@ -159,47 +224,12 @@ object Warehouse {
           touched.map(r => partitionCols.zipWithIndex
             .map { case (c, i) => col(c) === lit(r.get(i)) }
             .reduce(_ && _)).reduce(_ || _))
-        val delta = new Path(path(dir, table + "__delta"))
-        val dst = new Path(path(dir, table))
-        val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val (fs, swap) = swapOf(spark, dir, table)
         // stage: materializes the pruned existing read before any move
         antiMerged(pruned).write.mode(SaveMode.Overwrite)
-          .partitionBy(partitionCols: _*).parquet(delta.toString)
-        // enumerate the staged leaf partition dirs (depth = #partition
-        // cols) — Spark already encoded the values, so relative paths
-        // transfer verbatim to the live table
-        def leaves(base: Path, depth: Int): Seq[Path] =
-          if (depth == 0) Seq(base)
-          else fs.listStatus(base).toSeq
-            .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-            .flatMap(st => leaves(st.getPath, depth - 1))
-        val aside = new Path(path(dir, table + "__mergeold"))
-        if (fs.exists(aside)) fs.delete(aside, true)
-        // listStatus returns fully-qualified paths (scheme + authority);
-        // strip the equally-qualified delta prefix to get the relative
-        // partition path
-        val deltaPrefix = fs.makeQualified(delta).toString
-        leaves(delta, partitionCols.size).foreach { d =>
-          val rel = d.toString.stripPrefix(deltaPrefix).stripPrefix("/")
-          val target = new Path(dst, rel)
-          val asideDir = new Path(aside, rel)
-          fs.mkdirs(asideDir.getParent)
-          fs.mkdirs(target.getParent)
-          val had = fs.exists(target)
-          if (had && !fs.rename(target, asideDir))
-            throw new java.io.IOException(
-              s"mergeByKey: rename $target -> $asideDir failed")
-          if (!fs.rename(d, target)) {
-            val restored = !had || fs.rename(asideDir, target)
-            throw new java.io.IOException(
-              s"mergeByKey: rename $d -> $target failed" +
-                (if (restored) " (previous partition restored)"
-                 else s" AND restore failed — data preserved at $asideDir"))
-          }
-        }
-        fs.delete(delta, true)
-        fs.delete(aside, true)
-        ()
+          .partitionBy(partitionCols: _*)
+          .parquet(swap.stage(table).toString)
+        swap.commit(stagedMembers(fs, swap, table))
       }
     }
   }
@@ -230,7 +260,6 @@ object Warehouse {
     */
   private def versionDirs(spark: SparkSession, dir: String,
       table: String): Seq[(Long, Boolean)] = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(versionRoot(dir, table))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
@@ -278,7 +307,6 @@ object Warehouse {
     */
   def vacuumVersions(spark: SparkSession, dir: String, table: String,
       keep: Int): Unit = {
-    import org.apache.hadoop.fs.Path
     require(keep >= 1, "vacuumVersions: keep must be >= 1")
     val root = new Path(versionRoot(dir, table))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -302,14 +330,12 @@ object Warehouse {
     * proportional to table bytes — which is the only acceptable cost
     * for expiring data at 100 TB (a filter-and-rewrite ages the whole
     * table through the cluster). Expired dirs are moved into a
-    * `.expired-<stamp>` sibling first (one rename per partition — the
-    * same staged-swap discipline as [[overwriteSwap]]), so a crash
-    * mid-expiry never leaves a half-deleted partition visible, then
-    * the stage is deleted. Returns the expired partition values.
+    * `.expired-<stamp>` sibling first (one rename per partition), so a
+    * crash mid-expiry never leaves a half-deleted partition visible,
+    * then the stage is deleted. Returns the expired partition values.
     */
   def expirePartitions(spark: SparkSession, dir: String, table: String,
       partitionCol: String, cutoff: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val base = new Path(path(dir, table))
     // resolve the FS from the path (like every other mutator here) —
     // FileSystem.get(conf) is the DEFAULT fs and throws "Wrong FS" for

@@ -39,15 +39,6 @@ object Dedup {
   def shingles(text: Column, n: Int): Column =
     graft.functions.ShingleFunctions.wordShingles(text, n)
 
-  /** Character n-gram shingles. */
-  def charShingles(text: Column, n: Int): Column = {
-    val s = trim(text)
-    when(length(s) >= n,
-      transform(sequence(lit(1), length(s) - (n - 1)),
-        i => s.substr(i, lit(n))))
-      .otherwise(array(s))
-  }
-
   // ------------------------------------------------------------------
   // MinHash
   // ------------------------------------------------------------------

@@ -182,12 +182,14 @@ object Index {
     * `docs/seg=N`. One pass over the batch; the corpus is not touched.
     */
   def writeSegment(df: DataFrame, idCol: String, textCol: String,
-      path: String, seg: Int, nBuckets: Int = 16): Unit =
+      path: String, seg: Int, nBuckets: Int = 16): Unit = {
+    // a dead compaction is finished first: its stashed postings/docs
+    // must not be shadowed by a fresh segment dir
+    segmentSwap(df.sparkSession, path).recover(segmentMembers)
     // postings and manifest are independent writes to distinct dirs,
     // both pure functions of the batch — overlapped (guide §2.6, the
     // writeIndexAs pattern). Note this is WITHIN one segment: the
-    // compaction path's postings+manifest RENAME pair stays sequential
-    // (that one is a single logical commit).
+    // compaction path's postings+manifest swap is one DirSwap unit.
     ParJobs(
       () => postingsOf(df, idCol, textCol, nBuckets)
         .repartition(col("bucket"))
@@ -196,6 +198,7 @@ object Index {
       () => df.select(col(idCol).as("doc_id")).distinct()
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/docs/seg=$seg"))
+  }
 
   /** Term lookup over a segmented index: bucket pruning applies inside
     * EVERY segment (`seg`/`bucket` are both partition directories, the
@@ -212,12 +215,15 @@ object Index {
     require(terms.nonEmpty, "termLookupSegments: terms must be non-empty")
     import org.apache.spark.sql.expressions.Window
     val buckets = terms.map(termBucket(_, nBuckets)).distinct
-    val post = spark.read.option("basePath", s"$path/postings")
-      .parquet(s"$path/postings")
+    // both halves resolved through the swap unit: a reader racing (or
+    // outliving) a compaction sees the old pair or the new pair
+    val swap = segmentSwap(spark, path)
+    val postPath = swap.resolve("postings").toString
+    val docsPath = swap.resolve("docs").toString
+    val post = spark.read.option("basePath", postPath).parquet(postPath)
     val bucketLits = AtRest.partitionLits("termLookupSegments", "bucket",
       post.schema("bucket").dataType, buckets.map(_.toLong))
-    val latest = spark.read.option("basePath", s"$path/docs")
-      .parquet(s"$path/docs")
+    val latest = spark.read.option("basePath", docsPath).parquet(docsPath)
       .groupBy("doc_id")
       .agg(max(col("seg").cast("long")).as("__live_seg"))
     val probed = post
@@ -236,13 +242,25 @@ object Index {
       .select("term", "df", "doc_id", "tf", "rank")
   }
 
+  /** The segmented index's swap unit: postings + manifest move as one. */
+  private val segmentMembers = Seq("postings", "docs")
+  private def segmentSwap(spark: SparkSession, path: String): DirSwap = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    new DirSwap(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      root, "compact")
+  }
+
   /** Fold all segments into a fresh seg=0 (live rows only) and drop the
-    * rest — the LSM compaction. Staged write + directory swap, restore
-    * on failure (`overwriteSwap`'s discipline).
+    * rest — the LSM compaction. Postings and manifest are staged, then
+    * swapped in as ONE [[DirSwap]] unit: a compacted postings dir paired
+    * with the OLD manifest (or vice versa) would make every lookup
+    * silently return zero rows — the liveness filter expects seg
+    * numbers the other half no longer has.
     */
   def compactSegments(spark: SparkSession, path: String,
       nBuckets: Int = 16): Unit = {
-    import org.apache.hadoop.fs.Path
+    val swap = segmentSwap(spark, path)
+    swap.recover(segmentMembers)
     val post = spark.read.option("basePath", s"$path/postings")
       .parquet(s"$path/postings")
     val latest = spark.read.option("basePath", s"$path/docs")
@@ -252,52 +270,11 @@ object Index {
     val live = post.join(latest, "doc_id")
       .filter(col("seg").cast("long") === col("__live_seg"))
       .select("term", "doc_id", "tf", "bucket")
-    val docs = latest.select("doc_id")
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // stage the compacted layout next to the live one
-    val stage = new Path(s"$path/__compact")
-    if (fs.exists(stage)) fs.delete(stage, true)
     live.repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/__compact/postings/seg=0")
-    docs.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/__compact/docs/seg=0")
-    // postings + docs must move as ONE logical commit: a compacted
-    // postings dir paired with the OLD manifest (or vice versa) makes
-    // every lookup silently return zero rows — the liveness filter
-    // expects seg numbers the other half no longer has. Stash BOTH,
-    // then promote BOTH; any failure rolls back whatever moved so the
-    // old paired layout is restored. (A hard process crash inside the
-    // window leaves the `__old_*` stashes on disk — recovery is
-    // renaming them back; they are only deleted after both promotes
-    // succeed.)
-    val names = Seq("postings", "docs")
-    def cur(n: String) = new Path(s"$path/$n")
-    def aside(n: String) = new Path(s"$path/__old_$n")
-    try {
-      names.foreach { n =>
-        if (fs.exists(aside(n))) fs.delete(aside(n), true)
-        if (!fs.rename(cur(n), aside(n)))
-          throw new java.io.IOException(
-            s"compactSegments: stash $n failed")
-      }
-      names.foreach { n =>
-        if (!fs.rename(new Path(s"$path/__compact/$n"), cur(n)))
-          throw new java.io.IOException(
-            s"compactSegments: swap $n failed")
-      }
-    } catch {
-      case e: Throwable =>
-        names.foreach { n =>
-          if (fs.exists(aside(n))) {
-            if (fs.exists(cur(n))) fs.delete(cur(n), true)
-            fs.rename(aside(n), cur(n))
-          }
-        }
-        throw e
-    }
-    names.foreach(n => fs.delete(aside(n), true))
-    fs.delete(stage, true)
+      .parquet(s"${swap.stage("postings")}/seg=0")
+    latest.select("doc_id").coalesce(1).write.mode("overwrite")
+      .parquet(s"${swap.stage("docs")}/seg=0")
+    swap.commit(segmentMembers)
   }
 }

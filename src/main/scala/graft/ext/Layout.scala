@@ -92,22 +92,6 @@ object Layout {
     cur.drop(px, py)
   }
 
-  /** Hilbert-clustered write — [[zorderWrite]] with the better curve:
-    * one range shuffle on the d-index (sampled bounds, balanced
-    * files), sort within partitions, helper column dropped. Each of
-    * the `nFiles` files covers a compact d-range = a CONTIGUOUS
-    * spatial blob (see [[withHilbert]]), so per-file min/max stays
-    * selective on both columns with strictly better locality than the
-    * Morton interleave.
-    */
-  def hilbertOrderWrite(df: DataFrame, colA: String, colB: String,
-      bits: Int, nFiles: Int, path: String): Unit =
-    withHilbert(df, colA, colB, bits, "__h")
-      .repartitionByRange(nFiles, col("__h"))
-      .sortWithinPartitions("__h")
-      .drop("__h")
-      .write.mode("overwrite").parquet(path)
-
   /** Exact d-interval decomposition of an axis-aligned cell box under
     * the Hilbert curve — the planning half of Hilbert-clustered
     * pruning (the Hilbert R-tree idea, Kamel & Faloutsos VLDB '94):
@@ -199,8 +183,7 @@ object Layout {
       xLo: Long, xHi: Long, yLo: Long, yHi: Long): Seq[String] = {
     val iv = hilbertBoxIntervals(bits, xLo, xHi, yLo, yHi)
     if (iv.isEmpty) return Seq.empty
-    spark.read.parquet(sidecarPath(new Path(path).getFileSystem(
-        spark.sessionState.newHadoopConf()), path))
+    spark.read.parquet(sidecarPath(spark, path))
       .select("file", "mn", "mx").collect()
       .filter { r =>
         val (mn, mx) = (r.getLong(1), r.getLong(2))
@@ -287,8 +270,7 @@ object Layout {
     */
   def zoneFiles(spark: SparkSession, path: String, lo: Column,
       hi: Column): Seq[String] =
-    spark.read.parquet(sidecarPath(new Path(path).getFileSystem(
-        spark.sessionState.newHadoopConf()), path))
+    spark.read.parquet(sidecarPath(spark, path))
       .where(!(col("mx") < lo || col("mn") > hi))
       .select("file").collect().map(_.getString(0)).toSeq
 
@@ -313,10 +295,10 @@ object Layout {
       path: String): Unit = {
     val spark = df.sparkSession
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    // a prior swap that died between its stash and its promote left no
-    // live `.zones` — roll forward (single-writer, so no rename race)
-    // before reading it
-    recoverZones(fs, path)
+    // finish (or discard) a sidecar swap a prior run died inside before
+    // reading the sidecar (single-writer, so no rename race)
+    val (swap, sidecar) = (zonesSwap(spark, path), Seq(zonesName(path)))
+    swap.recover(sidecar)
     val prior = spark.read.parquet(path + ".zones")
       .select("file", "mn", "mx", "rows").collect()
     def listing: Set[String] = fs.listStatus(new Path(path)).toSeq
@@ -349,8 +331,8 @@ object Layout {
     fresh.unionByName(spark.createDataFrame(
         spark.sparkContext.parallelize(prior.toSeq, 1), fresh.schema))
       .coalesce(1)
-      .write.mode("overwrite").parquet(path + ".zones.next")
-    swapZones(spark, path)
+      .write.mode("overwrite").parquet(swap.stage(sidecar.head).toString)
+    swap.commit(sidecar)
     fs.delete(marker, false)
   }
 
@@ -404,8 +386,8 @@ object Layout {
     * compact) at a time per table — see [[zoneAppend]]. Crash recovery
     * is marker-gated: every window in which part files can exist
     * unreferenced leaves a detectable marker (`<path>.compact` tmp dir
-    * here, `.append.inprogress` from [[zoneAppend]], a stale
-    * `.zones.next`/`.zones.old` from a death inside the sidecar swap),
+    * here, `.append.inprogress` from [[zoneAppend]], the sidecar
+    * swap's stage or aside directory from a death inside the swap),
     * so the HAPPY path deletes exactly the victim files it already
     * knows by name — no directory listing — and the full
     * listing-and-sweep of unreferenced files runs only when a marker
@@ -418,18 +400,18 @@ object Layout {
     val fsEarly = new Path(path).getFileSystem(
       spark.sessionState.newHadoopConf())
     // crash markers, captured BEFORE this run creates/clears any of
-    // them — and BEFORE recoverZones consumes .zones.next/.zones.old,
-    // which are themselves evidence a prior run died (its victims may
-    // be unreferenced): a leftover means some prior append/compact
-    // died inside a window where promoted or appended part files may
-    // be unreferenced by the sidecar — only then is the listing sweep
-    // due
-    val staleMarkers = Seq(path + ".compact", path + ".append.inprogress",
-      path + ".zones.next", path + ".zones.old")
+    // them — and BEFORE recovery consumes the sidecar swap's debris,
+    // itself evidence a prior run died (its victims may be
+    // unreferenced): a leftover means some prior append/compact died
+    // inside a window where promoted or appended part files may be
+    // unreferenced by the sidecar — only then is the listing sweep due
+    val staleMarkers = Seq(path + ".compact", path + ".append.inprogress")
       .map(new Path(_)).filter(fsEarly.exists)
-    // roll a crashed mid-swap sidecar forward before reading it (see
-    // recoverZones — single-writer, so no rename race)
-    recoverZones(fsEarly, path)
+    val (swap, sidecar) = (zonesSwap(spark, path), Seq(zonesName(path)))
+    val priorDied = staleMarkers.nonEmpty || swap.pending
+    // finish (or discard) a crashed sidecar swap before reading it
+    // (single-writer, so no rename race)
+    swap.recover(sidecar)
     val zonesDf = spark.read.parquet(path + ".zones")
       .select("file", "mn", "mx", "rows")
     val zSchema = zonesDf.schema
@@ -538,8 +520,8 @@ object Layout {
           spark.sparkContext.parallelize(freshRows ++ keep.toSeq, 1),
           zSchema)
         .coalesce(1)
-        .write.mode("overwrite").parquet(path + ".zones.next")
-      swapZones(spark, path)
+        .write.mode("overwrite").parquet(swap.stage(sidecar.head).toString)
+      swap.commit(sidecar)
       // Victim delete, by the NAMES the sidecar already gave us — the
       // happy path pays zero directory listings. The new sidecar
       // committed first, so a crash mid-delete leaves only
@@ -556,13 +538,13 @@ object Layout {
       // accumulate forever. After this run's successful commit the
       // new sidecar is the whole truth, so every data file it does
       // not reference is deletable.
-      if (staleMarkers.nonEmpty)
+      if (priorDied)
         sweepUnreferenced(fs, path,
           (freshRows.iterator ++ keep.iterator)
             .map(r => r.getString(0)).toSet)
       fs.delete(new Path(tmp), true)
       fs.delete(new Path(path + ".append.inprogress"), false)
-    } else if (staleMarkers.nonEmpty) {
+    } else if (priorDied) {
       // Nothing overlaps, but a prior run died (e.g. after its sidecar
       // commit and before its victim delete, leaving no overlaps to
       // trigger the branch above): the committed sidecar is already
@@ -570,11 +552,7 @@ object Layout {
       // markers so the next compact is back on the zero-listing path.
       sweepUnreferenced(fsEarly, path,
         zones.iterator.map(_.getString(0)).toSet)
-      staleMarkers.foreach { m =>
-        // a stale .zones.next/.zones.old is swap debris only when the
-        // live sidecar exists; .zones is never in staleMarkers
-        fs2Delete(fsEarly, m)
-      }
+      staleMarkers.foreach(m => fs2Delete(fsEarly, m))
     }
   }
 
@@ -601,68 +579,20 @@ object Layout {
       p: Path): Unit =
     if (fs.exists(p)) fs.delete(p, fs.getFileStatus(p).isDirectory)
 
-  /** Staged sidecar swap — the new manifest is fully written before it
-    * replaces the old one, and the old one is STASHED (not deleted)
-    * until the new one is in place: a failure mid-swap restores it, so
-    * a reader never sees a missing or half-written sidecar.
-    */
-  /** Where the live sidecar is, tolerating a crash INSIDE a prior
-    * [[swapZones]] (stash done, promote not): `.zones` when present;
-    * else the fully-committed `.zones.next` (it was completely written
-    * before the swap began — rolling FORWARD loses nothing); else the
-    * stashed `.zones.old`. Non-mutating, so a concurrent reader can
-    * never race a live writer's renames; the next MAINTENANCE op
-    * repairs the names via [[recoverZones]] under the single-writer
-    * contract.
-    */
-  private def sidecarPath(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): String = {
-    if (fs.exists(new Path(path + ".zones"))) path + ".zones"
-    else if (fs.exists(new Path(path + ".zones.next"))) path + ".zones.next"
-    else if (fs.exists(new Path(path + ".zones.old"))) path + ".zones.old"
-    else path + ".zones" // read fails loudly on a truly absent sidecar
+  /** The sidecar's swap unit: `<path>.zones` under the table's parent. */
+  private def zonesName(path: String): String =
+    new Path(path).getName + ".zones"
+  private def zonesSwap(spark: SparkSession, path: String): DirSwap = {
+    val parent = new Path(path).getParent
+    new DirSwap(parent.getFileSystem(spark.sessionState.newHadoopConf()),
+      parent, zonesName(path))
   }
 
-  /** Mutating twin of [[sidecarPath]] for MAINTENANCE entries (append/
-    * compact — single-writer, so no rename race): if a prior swap died
-    * between its stash and its promote, promote the fully-committed
-    * `.zones.next` now and drop the stash; if only the stash survives
-    * (promote also lost `.next` somehow), restore it. After this the
-    * live sidecar is back at `.zones` and the op proceeds normally.
+  /** Where readers find the live sidecar, tolerating a crash inside a
+    * prior swap (non-mutating — see [[DirSwap.resolve]]).
     */
-  private def recoverZones(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit = {
-    val cur = new Path(path + ".zones")
-    val nxt = new Path(path + ".zones.next")
-    val old = new Path(path + ".zones.old")
-    if (!fs.exists(cur)) {
-      if (fs.exists(nxt)) {
-        if (!fs.rename(nxt, cur))
-          throw new java.io.IOException("recoverZones: promote failed")
-        fs.delete(old, true)
-      } else if (fs.exists(old)) {
-        if (!fs.rename(old, cur))
-          throw new java.io.IOException("recoverZones: restore failed")
-      }
-    }
-    ()
-  }
-
-  private def swapZones(spark: SparkSession, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    val cur = new Path(path + ".zones")
-    val nxt = new Path(path + ".zones.next")
-    val old = new Path(path + ".zones.old")
-    if (fs.exists(old)) fs.delete(old, true)
-    val had = fs.exists(cur)
-    if (had && !fs.rename(cur, old))
-      throw new java.io.IOException("swapZones: stash failed")
-    if (!fs.rename(nxt, cur)) {
-      if (had) fs.rename(old, cur)
-      throw new java.io.IOException("swapZones: swap failed")
-    }
-    fs.delete(old, true)
-  }
+  private def sidecarPath(spark: SparkSession, path: String): String =
+    zonesSwap(spark, path).resolve(zonesName(path)).toString
 
   /** Bucketed catalog-table write: hash-bucket on `key` into `nBuckets`
     * file groups, sorted within each bucket, registered so the planner

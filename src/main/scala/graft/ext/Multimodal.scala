@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.DigestFunctions.fastMd5
 
 /** Multimodal column handling for a training-data pipeline: media
   * (image/audio/video) travels as opaque `binary` columns next to typed
@@ -123,15 +122,6 @@ object Multimodal {
       }
     }
   }
-
-  /** Exact-duplicate media detection over the binary column — same
-    * hash-groupBy shape as text dedup (content hash computed scan-side).
-    */
-  def exactMediaDups(df: DataFrame, idCol: String,
-      contentCol: String): DataFrame =
-    df.groupBy(fastMd5(col(contentCol)).as("content_hash"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
-      .filter(col("n_copies") > 1)
 
   /** Near-duplicate media via the ANN path: extract features, then reuse
     * the embedding near-dup operator — multimodal dedup composes from the

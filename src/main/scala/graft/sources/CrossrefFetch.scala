@@ -10,9 +10,9 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * transport. The container has zero egress, so the policy — not the
   * socket — is the portable part: tests inject a scripted transport, and
   * a live deployment plugs `java.net.http` (or any HTTP stack) into the
-  * same function type. The DSv2 `CrossrefSource` then scans the fetched
-  * page files in parallel; this client is the driver-side producer that
-  * fills that directory.
+  * same function type. `Crossref.readPages` then reads the fetched page
+  * files; this client is the driver-side producer that fills that
+  * directory.
   *
   * Mirrored semantics:
   *  - 400 degradation ladder, in reference order: drop `select` → drop
@@ -124,7 +124,7 @@ object CrossrefFetch {
   private val mapper = new ObjectMapper
 
   /** Cursor-paginate `message.items` pages. Returns the raw page bodies
-    * (ready to be written as the page files `CrossrefSource` scans).
+    * (ready to be written as the page files `Crossref.readPages` reads).
     * Stops on: empty items, missing/repeated next-cursor, or `maxPages`.
     */
   def fetchPages(transport: Transport, url: String,

@@ -188,23 +188,6 @@ object StreamingJobs {
       .select(col("w.start").as("day"), col("n_active"))
   }
 
-  /** Streaming → warehouse sink with effective exactly-once-by-key
-    * semantics: every micro-batch lands through the K1 idempotent keyed
-    * append (dedup + anti-join + append), so batches replayed after a
-    * checkpoint recovery — Structured Streaming's at-least-once
-    * `foreachBatch` contract — are no-ops on the table. The same
-    * convergence property as the reference's re-runnable ingest
-    * (TECHDOC "run 4-5×"), now under a stream.
-    */
-  def sinkToWarehouse(events: DataFrame, dir: String, table: String,
-      keys: Seq[String])
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        graft.etl.Warehouse.idempotentAppend(
-          batch.sparkSession, batch, dir, table, keys)
-    }
-
   /** Stream-stream join: each purchase paired with the user's clicks in
     * the preceding hour — an event-time interval join with watermarks on
     * both sides, so join state is bounded by interval + watermark and
@@ -246,58 +229,6 @@ object StreamingJobs {
     */
   def purchaseContextOuter(events: DataFrame): DataFrame =
     purchaseContextJoin(events, "left_outer")
-
-  // ------------------------------------------------------------------
-  // transformWithState (Spark 4 arbitrary-state API)
-  // ------------------------------------------------------------------
-
-  case class UserRunningStats(user_id: Long, n_events: Long,
-      total_value: Double, max_value: Double)
-
-  /** Per-user running statistics with the Spark 4 `transformWithState`
-    * API: explicit `ValueState` survives across micro-batches (unlike
-    * flatMapGroupsWithState's single opaque state object, this handle
-    * supports multiple named states, TTL, and timers). Emits the updated
-    * running stats for every user touched by a batch.
-    */
-  class RunningStatsProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, UserRunningStats] {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{TTLConfig, ValueState}
-
-    @transient private var state: ValueState[(Long, Double, Double)] = _
-
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      state = getHandle.getValueState[(Long, Double, Double)](
-        "running", Encoders.product[(Long, Double, Double)],
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[UserRunningStats] = {
-      val (n0, t0, m0) =
-        if (state.exists()) state.get() else (0L, 0.0, Double.MinValue)
-      var (n, t, m) = (n0, t0, m0)
-      rows.foreach { e =>
-        n += 1; t += e.value; m = math.max(m, e.value)
-      }
-      state.update((n, t, m))
-      Iterator(UserRunningStats(key, n, t, m))
-    }
-  }
-
-  /** Drive the processor over an event stream. */
-  def runningStats(events: Dataset[Event]): Dataset[UserRunningStats] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningStatsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-  }
 
   // ------------------------------------------------------------------
   // Custom state: emit-on-close sessions

@@ -356,12 +356,6 @@ class ExtSpec extends SparkSpec {
     assert(sh(1) == Seq("x y"))
   }
 
-  test("char shingles") {
-    val sh = Seq("abcd").toDF("t")
-      .select(Dedup.charShingles($"t", 3)).as[Seq[String]].collect()
-    assert(sh(0) == Seq("abc", "bcd"))
-  }
-
   test("cosine + brute top-k + lsh top-k agreement") {
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f, 0.0f)),

@@ -48,12 +48,6 @@ class MultimodalSpec extends SparkSpec {
     assert(v.map(_.toSeq).distinct.length == v.length)
   }
 
-  test("exact media dups by content hash") {
-    val dups = Multimodal.exactMediaDups(items.toDF(), "mediaId", "content")
-    assert(dups.count() == 1)
-    assert(dups.select("keep_id").as[Long].head() == 1L)
-  }
-
   test("near-dup media composes with embedding dedup") {
     val pairs = Multimodal.nearDupMedia(items, threshold = 0.999)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet

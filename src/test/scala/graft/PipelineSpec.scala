@@ -175,8 +175,8 @@ class PipelineSpec extends SparkSpec {
     assert(files("anio=2021") == untouched2021)
     assert(files("anio=2022") == untouched2022)
     // staging/aside dirs cleaned up
-    assert(!new java.io.File(s"$dir/obras__delta").exists())
-    assert(!new java.io.File(s"$dir/obras__mergeold").exists())
+    assert(!new java.io.File(s"$dir/.obras.stage").exists())
+    assert(!new java.io.File(s"$dir/.obras.aside").exists())
 
     // re-running the same merge is idempotent on content
     Warehouse.mergeByKey(spark, batch, dir, "obras", Seq("doi"), Seq("anio"))
@@ -202,6 +202,31 @@ class PipelineSpec extends SparkSpec {
     assert(Warehouse.read(spark, dir, "obra_autor_afiliacion")
       .orderBy("doi", "autorId", "afiliacionId").collect().toSeq == oaa1)
     assert(Warehouse.read(spark, dir, "obra_tema").count() == 5)
+  }
+
+  test("re-run after a crash between overwriteSwap's stash and promote " +
+      "of autores keeps every author row and id, appends no facts") {
+    val dir = freshDir()
+    Pipeline.ingest(spark, pages + "/page1.jsonl", dir)
+    Pipeline.ingest(spark, pages + "/page2.jsonl", dir)
+    def table(t: String) = Warehouse.read(spark, dir, t).collect()
+      .map(_.toSeq.mkString("|")).toSeq.sorted
+    val autores = table("autores")
+    val factTables = Seq("obras", "obra_tema", "obra_autor_afiliacion")
+    val factsBefore = factTables.map(table)
+    // the state a re-run over page2 leaves when it dies inside its
+    // autores swap: the merged table (same rows — the batch adds no
+    // entity) fully staged, the commit point created, live stashed
+    val live = new java.io.File(s"$dir/autores")
+    val stage = new java.io.File(s"$dir/.autores.stage/autores")
+    val aside = new java.io.File(s"$dir/.autores.aside/autores")
+    assert(stage.getParentFile.mkdirs() && aside.getParentFile.mkdirs())
+    org.apache.commons.io.FileUtils.copyDirectory(live, stage)
+    assert(live.renameTo(aside) && !live.exists())
+    Pipeline.ingest(spark, pages + "/page2.jsonl", dir)
+    assert(table("autores") === autores)
+    assert(factTables.map(table) === factsBefore)
+    assert(new java.io.File(dir).list().filter(_.startsWith(".")).isEmpty)
   }
 
   test("incremental ingest preserves dimension ids") {

@@ -72,38 +72,6 @@ class Round11Spec extends SparkSpec {
     assert(spark.read.parquet(path).count() === 60L)
   }
 
-  // ---- sidecar swap crash: roll-forward + reader fallback ----
-
-  test("a crash between swapZones' two renames (no live .zones) is " +
-      "survivable: readers fall back non-mutating, the next " +
-      "maintenance op rolls the committed .zones.next forward") {
-    val dir = java.nio.file.Files.createTempDirectory("zones11c").toString
-    val path = s"$dir/t"
-    graft.ext.Layout.zoneWrite(
-      (1L to 80L).map(i => (i, i * 5L)).toDF("id", "x"), "x", 4, path)
-    // simulate the exact window: stash done (.zones -> .zones.old),
-    // promote not (.zones.next fully committed, no live .zones)
-    val zonesDir = new java.io.File(path + ".zones")
-    spark.read.parquet(path + ".zones").write
-      .parquet(path + ".zones.next")
-    assert(zonesDir.renameTo(new java.io.File(path + ".zones.old")))
-    assert(!zonesDir.exists())
-    // reader fallback: prune still works, and the reader MUTATES
-    // NOTHING (it could race a live writer's renames)
-    val files = graft.ext.Layout.zoneFiles(spark, path,
-      lit(0L), lit(100000L))
-    assert(files.nonEmpty)
-    assert(!zonesDir.exists(), "reader repaired the sidecar itself")
-    // maintenance rolls forward and proceeds
-    graft.ext.Layout.zoneAppend(
-      (81L to 90L).map(i => (i, i * 5L)).toDF("id", "x"), "x", 1, path)
-    assert(zonesDir.exists())
-    assert(!new java.io.File(path + ".zones.next").exists())
-    assert(spark.read.parquet(path).count() === 90L)
-    val zones = spark.read.parquet(path + ".zones")
-    assert(zones.agg(sum("rows")).collect().head.getLong(0) === 90L)
-  }
-
   // ---- sign-RP hyperplane family: distinct AND balanced ----
 
   test("rpDot's 21 hyperplanes are pairwise distinct, antipodal-free, " +

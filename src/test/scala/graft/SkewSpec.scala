@@ -21,22 +21,6 @@ class SkewSpec extends SparkSpec {
     (0L, "zero"), (1L, "hot"), (2L, "two"), (3L, "three"),
     (4L, "four"), (5L, "five"), (6L, "six")).toDF("k", "label")
 
-  test("saltedJoin equals the plain join and spreads the hot key") {
-    val plain = big.join(dim, Seq("k"))
-      .select("row_id", "k", "v", "label")
-      .collect().map(_.toSeq).toSet
-    val salted = Skew.saltedJoin(big, dim, Seq("k"),
-      saltFrom = col("row_id"), salt = 8)
-      .select("row_id", "k", "v", "label")
-      .collect().map(_.toSeq).toSet
-    assert(salted == plain)
-    // the hot key's rows really occupy several shards
-    val shards = big.filter($"k" === 1L)
-      .select(pmod(xxhash64($"row_id"), lit(8)).cast("int"))
-      .distinct().count()
-    assert(shards > 4)
-  }
-
   test("saltedAgg: exact distinct count via two phases") {
     val expected = big.groupBy("k")
       .agg(count_distinct($"v").as("n_distinct"))
