@@ -1,8 +1,15 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame,
+  DataFrameReader, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import graft.ext.DirSwap
 
@@ -87,43 +94,85 @@ object Warehouse {
         .foreach(recover(spark, dir, _))
   }
 
-  /** The table as readers see it: while a committed swap is mid-promote,
-    * its staged members replace their live counterparts (see
-    * [[DirSwap]]). Mutates nothing.
+  /** The table's data as readers see it, as the (basePath, paths) reads
+    * to union: while a committed swap is mid-promote, its staged members
+    * replace their live counterparts (see [[DirSwap]]). Mutates nothing.
     */
-  def read(spark: SparkSession, dir: String, table: String): DataFrame = {
+  private def sources(spark: SparkSession, dir: String,
+      table: String): (FileSystem, Seq[(Path, Seq[Path])]) = {
     val (fs, swap) = swapOf(spark, dir, table)
     val staged = if (swap.committed) stagedMembers(fs, swap, table) else Nil
-    val (livePath, stagedPath) = (path(dir, table), swap.stage(table).toString)
-    if (staged.isEmpty) spark.read.parquet(livePath)
-    else if (staged == Seq(table)) spark.read.parquet(stagedPath)
-    else {
-      // partition merge mid-promote: live leaves not re-staged ∪ staged
-      val rest = partitionLeaves(fs, new Path(livePath))
-        .filterNot(rel => staged.contains(s"$table/$rel"))
-        .map(rel => s"$livePath/$rel")
-      val stagedRead = spark.read.parquet(stagedPath)
-      if (rest.isEmpty) stagedRead
-      else spark.read.option("basePath", livePath).parquet(rest: _*)
-        .unionByName(stagedRead)
-    }
+    val (live, stage) = (new Path(path(dir, table)), swap.stage(table))
+    val reads =
+      if (staged.isEmpty) Seq(live -> Seq(live))
+      else if (staged == Seq(table)) Seq(stage -> Seq(stage))
+      else {
+        // partition merge mid-promote: live leaves not re-staged ∪ staged
+        val rest = partitionLeaves(fs, live)
+          .filterNot(rel => staged.contains(s"$table/$rel"))
+          .map(rel => new Path(live, rel))
+        (if (rest.isEmpty) Nil else Seq(live -> rest)) :+ (stage -> Seq(stage))
+      }
+    (fs, reads)
+  }
+
+  /** One `reader` read per [[sources]] entry, unioned by column name. */
+  private def union(reads: Seq[(Path, Seq[Path])],
+      reader: => DataFrameReader): DataFrame =
+    reads.map { case (base, paths) =>
+      reader.option("basePath", base.toString).parquet(paths.map(_.toString): _*)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** The table as readers see it (see [[sources]]), under the schema
+    * from [[footerSchema]]: building the DataFrame runs no Spark job.
+    */
+  def read(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val (fs, reads) = sources(spark, dir, table)
+    val schema = footerSchema(spark, fs, reads.flatMap(_._2))
+    union(reads, spark.read.schema(schema))
+  }
+
+  /** The data schema Spark's own inference settles on without
+    * `mergeSchema` — that of the first data file in path order — read
+    * from the file's footer on the driver, with Spark's footer-to-schema
+    * conversion under the session conf. Inference opens that same
+    * footer inside a Spark job, a fixed cost that dominated small reads
+    * such as a dashboard chart. Partition columns are not in the footer;
+    * Spark still infers them from the paths. A missing path or one with
+    * no data file fails as Spark's inference would.
+    */
+  private def footerSchema(spark: SparkSession, fs: FileSystem,
+      roots: Seq[Path]): StructType = {
+    roots.find(!fs.exists(_)).foreach(p => throw new AnalysisException(
+      "PATH_NOT_FOUND", Map("path" -> fs.makeQualified(p).toString)))
+    def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap(st =>
+      if (isDataFile(st)) Seq(st)
+      else if (isPartitionDir(st)) files(st.getPath) else Nil)
+    val first = roots.flatMap(files).minByOption(_.getPath.toString)
+      .getOrElse(throw new AnalysisException(
+        "UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet")))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(first, fs.getConf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** Schema-evolution read (the reference's `_ensure_column` analog,
     * PIPE:200-205, moved to the read path): Parquet footer merge across
     * batches written under older, narrower schemas — missing columns
-    * surface as nulls, no ALTER TABLE.
+    * surface as nulls, no ALTER TABLE. Resolves the table like [[read]].
     */
   def readMerged(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path(dir, table))
+    union(sources(spark, dir, table)._2,
+      spark.read.option("mergeSchema", "true"))
 
   /** Write-side evolution: align a batch to `target` — missing columns
     * become typed nulls, present ones cast — so old writers can keep
     * appending after the schema widened (the other `_ensure_column`
     * direction).
     */
-  def ensureColumns(df: DataFrame,
-      target: org.apache.spark.sql.types.StructType): DataFrame =
+  def ensureColumns(df: DataFrame, target: StructType): DataFrame =
     df.select(target.fields.toSeq.map { f =>
       (if (df.columns.contains(f.name)) col(f.name).cast(f.dataType)
        else lit(null).cast(f.dataType)).as(f.name)

@@ -72,10 +72,12 @@ object CrashFs {
 /** Every crash point of the one at-rest swap ([[graft.ext.DirSwap]]),
   * for every caller: a one-member unit (`overwriteSwap`), a partition
   * merge touching an existing and a new partition, the segmented
-  * index's postings + manifest, and the zone sidecar. At each point a
-  * reader sees all-old or all-new, never a missing path, and mutates
-  * nothing; the next writer converges to what it would have produced
-  * after the old or the new state, with no swap debris left behind.
+  * index's postings + manifest, and the zone sidecar; plus the
+  * schema-evolution read (`readMerged`) over both warehouse swaps. At
+  * each point a reader sees all-old or all-new, never a missing path,
+  * and mutates nothing; the next writer converges to what it would
+  * have produced after the old or the new state, with no swap debris
+  * left behind.
   */
 class DirSwapCrashSpec extends SparkSpec {
   import spark.implicits._
@@ -107,6 +109,10 @@ class DirSwapCrashSpec extends SparkSpec {
     assert(Warehouse.exists(spark, dir, "t"), "live table missing")
     rows(Warehouse.read(spark, dir, "t").select("id", "v", "p"))
   }
+
+  /** The schema-evolution read through the same resolution. */
+  private def mergedView(dir: String): Seq[String] =
+    rows(Warehouse.readMerged(spark, dir, "t").select("id", "v", "p"))
 
   private def facts(r: Seq[(Long, String, Int)]) = r.toDF("id", "v", "p")
 
@@ -165,7 +171,10 @@ class DirSwapCrashSpec extends SparkSpec {
       assert(n === sidecar)
     })
 
-  for (row <- Seq(overwriteRow, mergeRow, compactRow, zoneRow))
+  private val mergedRows = Seq(overwriteRow, mergeRow).map(r =>
+    r.copy(name = s"readMerged over ${r.name}", view = mergedView))
+
+  for (row <- Seq(overwriteRow, mergeRow, compactRow, zoneRow) ++ mergedRows)
     test(s"every crash point of the swap: ${row.name}") {
       def run(steps: (String => Unit)*): Seq[String] = {
         val dir = freshDir()
